@@ -1,0 +1,10 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Bridge to the `private[spark]` listener bus: blocks until every event
+  * posted so far has been delivered to every listener, so counters read
+  * afterwards are complete without sleeping and polling. */
+object Drain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
