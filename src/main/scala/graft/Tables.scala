@@ -90,13 +90,23 @@ object Tables {
       // compiled code lives in the JIT code cache either way (already
       // sized at 1g in build.sbt). Scale-independent: any long-lived
       // session serving this many distinct operators needs the same dial.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config(CODEGEN_CACHE_KEY, CODEGEN_CACHE_ENTRIES)
       // registers native expressions (cosine_sim) with the SQL registry
       .config("spark.sql.extensions", "org.apache.spark.sql.graftx.GraftExtensions")
       // bucketed-table catalog (Sinks.writeBucketed) — keep out of the repo
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-    b.getOrCreate()
+    val s = b.getOrCreate()
+    // a static conf is silently ignored when getOrCreate returns a session
+    // that already existed in this JVM (every query would then recompile)
+    val entries = s.conf.get(CODEGEN_CACHE_KEY)
+    if (entries != CODEGEN_CACHE_ENTRIES) System.err.println(
+      s"[graft] WARN $CODEGEN_CACHE_KEY is $entries, not $CODEGEN_CACHE_ENTRIES: " +
+        "a session already existed, so the static conf did not take effect")
+    s
   }
+
+  private val CODEGEN_CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
+  private val CODEGEN_CACHE_ENTRIES = "4096"
 
   val DEC: DecimalType = DecimalType(38, 6)
 

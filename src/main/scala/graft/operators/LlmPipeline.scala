@@ -178,6 +178,62 @@ object LlmPipeline extends QueryPack {
     df.repartition(
       org.apache.spark.sql.graftx.Sizing.numShufflePartitions(df), col(key))
 
+  /** The batch slice of the registered `*_delta` queries: ids `% 10 = 7`
+    * play a new ingest batch, every other id the standing corpus. */
+  private def inBatch(id: String = "vec_id"): Column = col(id) % 10 === 7
+
+  // ANN search = probes + annCands + one scorer (annExactTop3, or
+  // pqAdcRerank for the PQ tiers); DESIGN.md "ANN search" maps each query
+  // and ingest facade onto these pieces.
+
+  /** Join keys (probe column → index column) of the IVF and LSH indexes. */
+  private val byCell = Seq("cell" -> "cell")
+  private val byBucket = Seq("tb" -> "tb", "bucket" -> "bucket")
+
+  /** Candidate (qid, nid) id pairs: probe rows ⋈ the size-gated index on
+    * `on`, optionally without self pairs and duplicate pairs; `keep`
+    * carries probe columns between qid and nid. Vectors never ride this
+    * join — they come back per surviving candidate in the scorer. Callers
+    * pass probes already [[spread]] or not (a measured per-query choice). */
+  private def annCands(probes: DataFrame, index: DataFrame, on: Seq[(String, String)],
+      exclSelf: Boolean, dedup: Boolean, keep: Seq[String] = Nil): DataFrame = {
+    val keys = on.map { case (p, i) => col(s"a.$p") === col(s"b.$i") }
+    val cond = (if (exclSelf) keys :+ (col("a.vec_id") =!= col("b.vec_id")) else keys)
+      .reduce(_ && _)
+    val cands = probes.as("a").join(maybeBroadcast(index.as("b")), cond)
+      .select((col("a.vec_id").as("qid") +: keep.map(c => col(s"a.$c").as(c)) :+
+        col("b.vec_id").as("nid")): _*)
+    if (dedup) cands.distinct() else cands
+  }
+
+  /** Exact-cosine top-3 of candidate (qid, nid) pairs: query vectors from
+    * `qVecs`, neighbor vectors from `nVecs` (an ingest batch is not in the
+    * stored table); other candidate columns ride between vec_id and
+    * neighbor_id. */
+  private def annExactTop3(cands: DataFrame, qVecs: DataFrame,
+      nVecs: DataFrame): DataFrame = {
+    val extra = cands.columns.toSeq.filterNot(Set("qid", "nid"))
+    val pairs = cands
+      .join(maybeBroadcast(qVecs.select(col("vec_id"), col("embedding")).as("ea")),
+        col("qid") === col("ea.vec_id"))
+      .join(maybeBroadcast(nVecs.select(col("vec_id"), col("embedding")).as("eb")),
+        col("nid") === col("eb.vec_id"))
+      .select((col("qid").as("vec_id") +: extra.map(col)) ++ Seq(col("nid").as("neighbor_id"),
+        r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos")): _*)
+    topKByCos(pairs, 3)
+  }
+
+  /** Top-`k` neighbors per vec_id by cosine (ties to the smaller id),
+    * ranked 1..k as `rnk`, sorted. The custom TopKPerKey plan: candidate
+    * pairs are generated map-side, so the k-bounded heaps run map-side and
+    * only ≤ k rows per vec_id per partition reach a shuffle. */
+  private def topKByCos(pairs: DataFrame, k: Int): DataFrame =
+    org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
+        keyNames = Seq("vec_id"),
+        orderBy = Seq("cos" -> false, "neighbor_id" -> true),
+        k = k, rankName = "rnk")
+      .orderBy("vec_id", "rnk")
+
   /** Width of one MinHash signature slice in hex chars: 8 → each slice is
     * a 32-bit min statistic. [[MINHASH_K]]·[[MINHASH_SLICE]] must not
     * exceed 2 × 32 (two md5 digests feed the slices). */
@@ -734,6 +790,14 @@ object LlmPipeline extends QueryPack {
         k = k, rankName = "arnk")
       .select(col("vec_id"), col("cell"))
 
+  /** Probe list for an ARBITRARY vector set against the frozen trained-k
+    * quantizer: 2⌈√k⌉ cells, k read off the √N-row centroid artifact —
+    * the batch twin of [[ivfKProbes]], as [[ivfcProbesFor]] is of
+    * [[ivfcProbes]]. */
+  private def ivfKProbesFor(s: SparkSession, d: String, e: DataFrame): DataFrame =
+    ivfKCellsFor(e, ivfKCentroids(s, d),
+      2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt)
+
   /** Target cell SIZE for the semantic-dedup quantizer (members per
     * cell, not cell count). Semantic dedup compares all pairs WITHIN a
     * cell, so cell size — not cell count — is the quantity that must stay
@@ -1285,7 +1349,7 @@ object LlmPipeline extends QueryPack {
     * broadcast-safe at any corpus scale. */
   private def pqCodebooks(s: SparkSession, d: String): DataFrame = {
     val cb = pqCodebooksArtifact(s, d)
-    // Density invariant (ADVICE r21): [[pqDtableWidePlan]] indexes the wide
+    // Density invariant (ADVICE r21): [[pqDtable]] indexes the wide
     // ADC row POSITIONALLY (subspace m's code c at slot m·K+c), which
     // requires every subspace codebook dense with exactly PQ_K codes 1..K.
     // A Lloyd cluster CAN empty (duplicate seed vectors on a dedup-heavy
@@ -1358,34 +1422,34 @@ object LlmPipeline extends QueryPack {
     }
 
   /** ADC distance table for a query set: one scalar per (query vector,
-    * subspace, code) — FAISS's per-query lookup table, relationally.
-    * M×K rows per query vector; query-set-bounded, so broadcastable in
-    * any serving/ingest regime (size-gated for the self-benchmark). */
-  private def pqDtablePlan(e: DataFrame, cb: DataFrame): DataFrame =
+    * subspace, code) — FAISS's per-query lookup table, relationally —
+    * against the frozen codebooks. M×K scalars per query vector;
+    * query-set-bounded, so broadcastable in any serving/ingest regime
+    * (size-gated for the self-benchmark). Pivoted WIDE — one row per
+    * QUERY vector carrying its M×K table as a single double array in
+    * (m, code) order (codes are 1-based, so subspace m's code c sits at
+    * array slot m·K + c). The narrow (qid, m, code, sd) form joined the
+    * candidate set once per subspace — M broadcast-hash probes (each its
+    * own BroadcastExchange job) per candidate row; this form makes the
+    * ADC stage ONE equi-join by qid plus M constant-index `element_at`
+    * lookups per candidate — identical doubles, identical left-to-right
+    * add order, 1/M-th the join work and M−1 fewer broadcast builds per
+    * execution (guide §2.4 / §3.1). */
+  private def pqDtable(s: SparkSession, d: String, e: DataFrame): DataFrame = {
+    val cb = pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))
     pqSubvectors(e)
       .select(col("vec_id").as("qid"), col("m"), col("sub"))
       .join(broadcast(cb), "m")
       .select(col("qid"), col("m"), col("code"), sqDist(col("sub"), col("centroid")).as("sd"))
+      .groupBy("qid")
+      .agg(array_sort(collect_list(struct(col("m"), col("code"), col("sd")))).as("t"))
+      .select(col("qid"), transform(col("t"), x => x.getField("sd")).as("sds"))
+  }
 
   /** Unsafe-row estimate of one WIDE ADC distance-table row: qid + the
     * M×K scalars as one double array (header + 8-byte slots + array
     * payload). */
   private val PQ_DTABLE_WIDE_ROW_BYTES = PQ_M * PQ_K * 8L + 48L
-
-  /** [[pqDtablePlan]] pivoted WIDE — one row per QUERY vector carrying
-    * its full M×K ADC lookup table as a single double array in (m, code)
-    * order (codes are 1-based, so subspace m's code c sits at array slot
-    * m·K + c). The narrow (qid, m, code, sd) form joined the candidate
-    * set once per subspace — M broadcast-hash probes (each its own
-    * BroadcastExchange job) per candidate row; this form makes the ADC
-    * stage ONE equi-join by qid plus M constant-index `element_at`
-    * lookups per candidate — identical doubles, identical left-to-right
-    * add order, 1/M-th the join work and M−1 fewer broadcast builds per
-    * execution (guide §2.4 / §3.1). */
-  private def pqDtableWidePlan(dtable: DataFrame): DataFrame =
-    dtable.groupBy("qid")
-      .agg(array_sort(collect_list(struct(col("m"), col("code"), col("sd")))).as("t"))
-      .select(col("qid"), transform(col("t"), x => x.getField("sd")).as("sds"))
 
   /** Size-gated broadcast for a PER-BATCH ADC distance table (ADVICE
     * r14): the table is O(batch·M·K) rows BY CONSTRUCTION, but a fresh
@@ -1413,6 +1477,16 @@ object LlmPipeline extends QueryPack {
     else dtable
   }
 
+  /** A batch's own ADC table ([[pqDtable]]), O(batch·M·K) scalars by
+    * construction — broadcast in its WIDE per-query form so the one-join
+    * ADC stage stays map-side (a fresh batch plan has no size estimate,
+    * so the generic gate would decline and re-shuffle the candidate set
+    * by qid). Size-gated on `estRows` (ADVICE r14): past the broadcast
+    * budget the join degrades to a shuffled join, not a forced OOM. */
+  private def pqBatchDtable(s: SparkSession, d: String, batch: DataFrame,
+      estRows: Long): DataFrame =
+    maybeBroadcastDtable(pqDtable(s, d, batch), estRows)
+
   /** Conservative row-count estimate for an embedding batch from its
     * optimized-plan size: a (vec_id, embedding[64]) row is ≥ 256 bytes
     * in Catalyst stats, so bytes/256 over-counts rows when stats are
@@ -1432,15 +1506,11 @@ object LlmPipeline extends QueryPack {
     * requires — two call sites each building `cached(…, "pq_dtable")`
     * made whichever ran second throw (r12 regression, VERDICT r12 #1). */
   private def pqCorpusDtable(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "pq_dtable") {
-      pqDtableWidePlan(pqDtablePlan(t(s, d, "embeddings"),
-        pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))))
-    }
+    cached(s, d, "pq_dtable") { pqDtable(s, d, t(s, d, "embeddings")) }
 
-  /** The shuffle-free ADC + exact-rerank tail shared by q_sim_ann_ivfpq
-    * and its ingest delta: the WIDE per-query distance table
-    * ([[pqDtableWidePlan]]) hash-joins once by qid onto UNEXPANDED
-    * candidate (qid, nid) rows; the approximate distance is then M
+  /** The shuffle-free ADC + exact-rerank scorer of every PQ tier: the
+    * WIDE per-query distance table ([[pqDtable]]) hash-joins once by qid
+    * onto UNEXPANDED candidate (qid, nid) rows; the approximate distance is then M
     * constant-index array lookups summed as a column expression — never
     * an aggregation, never a per-subspace join (the r21 restructure: the
     * M-level (qid, nibble) join fold paid M broadcast builds + M
@@ -1448,17 +1518,8 @@ object LlmPipeline extends QueryPack {
     * SAME sd_0+…+sd_{M−1} doubles in one codegen stage. The
     * exploded-candidate shuffle-agg form measured 1.9 s vs 1.4 s at
     * sf0.1; naive per-candidate vector math was 14× worse again). Only
-    * the ADC shortlist touches full-precision vectors for the rerank. */
-  private def pqAdcRerank(s: SparkSession, d: String,
-      cands: DataFrame, codesWide: DataFrame, dtableWide: DataFrame): DataFrame = {
-    val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    pqAdcRerank(cands, codesWide, dtableWide, e, e)
-  }
-
-  /** [[pqAdcRerank]] with explicit query-side / neighbor-side vector
-    * frames — the ingest facade ranks an EXTERNAL batch (vectors not in
-    * the stored table) against the persisted corpus index, so the exact
-    * rerank's qid lookups must hit the batch frame, not the table. */
+    * the ADC shortlist touches full-precision vectors for the rerank
+    * ([[annExactTop3]], query/neighbor vector frames as there). */
   private def pqAdcRerank(cands: DataFrame, codesWide: DataFrame,
       dtableWide: DataFrame, qVecs: DataFrame, nVecs: DataFrame): DataFrame = {
     // codes are 1-based (row_number seeds), so subspace m's lookup slot
@@ -1474,18 +1535,7 @@ object LlmPipeline extends QueryPack {
         keyNames = Seq("qid"), orderBy = Seq("adist" -> true, "nid" -> true),
         k = PQ_RERANK, rankName = "arnk")
       .select("qid", "nid")
-    val pairs = shortlist
-      .join(maybeBroadcast(qVecs.select(col("vec_id"), col("embedding")).as("ea")),
-        col("qid") === col("ea.vec_id"))
-      .join(maybeBroadcast(nVecs.select(col("vec_id"), col("embedding")).as("eb")),
-        col("nid") === col("eb.vec_id"))
-      .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-        r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-    org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-        keyNames = Seq("vec_id"),
-        orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-        k = 3, rankName = "rnk")
-      .orderBy("vec_id", "rnk")
+    annExactTop3(shortlist, qVecs, nVecs)
   }
 
   /** Window width (tokens) for substring-level dedup: a token position is
@@ -1943,43 +1993,20 @@ object LlmPipeline extends QueryPack {
     semanticVerdicts(s, d, b, corpus).orderBy("vec_id")
   }
 
-  /** Shared exact-cosine top-3 tail of the ANN ingest facades: candidate
-    * (qid, nid) pairs look up query vectors in the BATCH frame and
-    * neighbor vectors in the corpus. */
-  private def annExactTop3(cands: DataFrame, qVecs: DataFrame,
-      nVecs: DataFrame): DataFrame = {
-    val pairs = cands
-      .join(maybeBroadcast(qVecs.select(col("vec_id"), col("embedding")).as("ea")),
-        col("qid") === col("ea.vec_id"))
-      .join(maybeBroadcast(nVecs.select(col("vec_id"), col("embedding")).as("eb")),
-        col("nid") === col("eb.vec_id"))
-      .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-        r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-    org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-        keyNames = Seq("vec_id"),
-        orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-        k = 3, rankName = "rnk")
-      .orderBy("vec_id", "rnk")
-  }
-
-  /** Corpus-side embeddings (incl. committed overlay rows) excluding the
-    * batch's ids. */
-  private def corpusVecsExcl(s: SparkSession, d: String, batch: DataFrame): DataFrame =
-    visibleVecs(s, d).join(batch.select("vec_id"), Seq("vec_id"), "left_anti")
+  /** A corpus-side frame (persisted index, or the visible embeddings incl.
+    * committed overlay rows) without the batch's own ids — the ingest
+    * facades' stand-in for the registered deltas' `!inBatch` filter. */
+  private def minusBatch(index: DataFrame, b: DataFrame): DataFrame =
+    index.join(b.select("vec_id"), Seq("vec_id"), "left_anti")
 
   /** LSH-multiprobe ANN ingest: batch bucket rows computed fresh, corpus
     * side from the persisted multi-table bucket index. */
   private[graft] def ingestAnnLsh(s: SparkSession, d: String,
       batch: DataFrame): DataFrame = {
     val b = batch.select(col("vec_id"), col("embedding"))
-    val corpus = stdLshMulti(s, d)
-      .join(b.select("vec_id"), Seq("vec_id"), "left_anti")
-    val cands = lshMultiBucketsPlan(b).as("ba")
-      .join(maybeBroadcast(corpus.as("bb")), col("ba.tb") === col("bb.tb") &&
-        col("ba.bucket") === col("bb.bucket"))
-      .select(col("ba.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-      .distinct()
-    annExactTop3(cands, b, corpusVecsExcl(s, d, batch))
+    val cands = annCands(lshMultiBucketsPlan(b), minusBatch(stdLshMulti(s, d), b),
+      byBucket, exclSelf = false, dedup = true)
+    annExactTop3(cands, b, minusBatch(visibleVecs(s, d), b))
   }
 
   /** Constant-occupancy LSH ANN ingest (the LSH-family scale pick):
@@ -1990,17 +2017,9 @@ object LlmPipeline extends QueryPack {
       batch: DataFrame): DataFrame = {
     val b = batch.select(col("vec_id"), col("embedding"))
     val nbits = lshcNbits(embCount(s, d))
-    val probes = lshcProbesPlan(b, nbits)
-      // tail inherits qid partitioning; count pinned vs AQE coalesce
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("vec_id"))
-    val corpus = stdLshcOwn(s, d, nbits)
-      .join(b.select("vec_id"), Seq("vec_id"), "left_anti")
-    val cands = probes.as("pa")
-      .join(maybeBroadcast(corpus.as("pb")), col("pa.tb") === col("pb.tb") &&
-        col("pa.bucket") === col("pb.bucket"))
-      .select(col("pa.vec_id").as("qid"), col("pb.vec_id").as("nid"))
-      .distinct()
-    annExactTop3(cands, b, corpusVecsExcl(s, d, batch))
+    val cands = annCands(spread(lshcProbesPlan(b, nbits)), minusBatch(stdLshcOwn(s, d, nbits), b),
+      byBucket, exclSelf = false, dedup = true)
+    annExactTop3(cands, b, minusBatch(visibleVecs(s, d), b))
   }
 
   /** Trained-k IVF ANN ingest: batch probe cells ranked fresh against
@@ -2009,15 +2028,9 @@ object LlmPipeline extends QueryPack {
   private[graft] def ingestAnnIvfK(s: SparkSession, d: String,
       batch: DataFrame): DataFrame = {
     val b = batch.select(col("vec_id"), col("embedding"))
-    val cents = ivfKCentroids(s, d)
-    val np = 2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt
-    val cands = ivfKCellsFor(b, cents, np).as("a")
-      .join(maybeBroadcast(stdIvfkAssign2(s, d)
-          .join(b.select("vec_id"), Seq("vec_id"), "left_anti").as("bb")),
-        col("a.cell") === col("bb.cell"))
-      .select(col("a.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-      .distinct()
-    annExactTop3(cands, b, corpusVecsExcl(s, d, batch))
+    val cands = annCands(ivfKProbesFor(s, d, b), minusBatch(stdIvfkAssign2(s, d), b),
+      byCell, exclSelf = false, dedup = true)
+    annExactTop3(cands, b, minusBatch(visibleVecs(s, d), b))
   }
 
   /** Constant-cell IVF ANN ingest (the 100 TB scale pick): batch probes
@@ -2026,14 +2039,10 @@ object LlmPipeline extends QueryPack {
   private[graft] def ingestAnnIvfc(s: SparkSession, d: String,
       batch: DataFrame): DataFrame = {
     val b = batch.select(col("vec_id"), col("embedding"))
-    val cands = ivfcProbesFor(s, d, b).as("a")
-      .join(maybeBroadcast(
-          stdSemAssign2(s, d).select(col("vec_id"), col("cell"))
-          .join(b.select("vec_id"), Seq("vec_id"), "left_anti").as("bb")),
-        col("a.cell") === col("bb.cell"))
-      .select(col("a.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-      .distinct()
-    annExactTop3(cands, b, corpusVecsExcl(s, d, batch))
+    val cands = annCands(ivfcProbesFor(s, d, b),
+      minusBatch(stdSemAssign2(s, d).select(col("vec_id"), col("cell")), b),
+      byCell, exclSelf = false, dedup = true)
+    annExactTop3(cands, b, minusBatch(visibleVecs(s, d), b))
   }
 
   /** Trained-k IVF-PQ ANN ingest: batch computes its own probe list and
@@ -2043,22 +2052,9 @@ object LlmPipeline extends QueryPack {
   private[graft] def ingestAnnIvfPq(s: SparkSession, d: String,
       batch: DataFrame): DataFrame = {
     val b = batch.select(col("vec_id"), col("embedding"))
-    val cb = pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))
-    val cents = ivfKCentroids(s, d)
-    val np = 2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt
-    val cands = ivfKCellsFor(b, cents, np).as("a")
-      .join(maybeBroadcast(stdIvfkAssign2(s, d)
-          .join(b.select("vec_id"), Seq("vec_id"), "left_anti").as("bb")),
-        col("a.cell") === col("bb.cell"))
-      .select(col("a.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-      .distinct()
-    pqAdcRerank(cands,
-      stdPqCodesWide(s, d)
-        .join(b.select(col("vec_id").as("nid")), Seq("nid"), "left_anti"),
-      // size-gated (ADVICE r14): an arbitrary facade batch can exceed the
-      // broadcast budget -- oversized tables degrade to shuffled folds
-      maybeBroadcastDtable(pqDtableWidePlan(pqDtablePlan(b, cb)), estBatchRows(b)),
-      b, corpusVecsExcl(s, d, batch))
+    val cands = annCands(ivfKProbesFor(s, d, b), minusBatch(stdIvfkAssign2(s, d), b),
+      byCell, exclSelf = false, dedup = true)
+    ingestPqRerank(s, d, cands, b)
   }
 
   /** Constant-cell IVF-PQ ANN ingest — the linear-class PQ tier's
@@ -2066,22 +2062,20 @@ object LlmPipeline extends QueryPack {
   private[graft] def ingestAnnIvfcPq(s: SparkSession, d: String,
       batch: DataFrame): DataFrame = {
     val b = batch.select(col("vec_id"), col("embedding"))
-    val cb = pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))
-    val cands = ivfcProbesFor(s, d, b).as("a")
-      .join(maybeBroadcast(
-          stdSemAssign2(s, d).select(col("vec_id"), col("cell"))
-          .join(b.select("vec_id"), Seq("vec_id"), "left_anti").as("bb")),
-        col("a.cell") === col("bb.cell"))
-      .select(col("a.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-      .distinct()
-    pqAdcRerank(cands,
-      stdPqCodesWide(s, d)
-        .join(b.select(col("vec_id").as("nid")), Seq("nid"), "left_anti"),
-      // size-gated (ADVICE r14): an arbitrary facade batch can exceed the
-      // broadcast budget -- oversized tables degrade to shuffled folds
-      maybeBroadcastDtable(pqDtableWidePlan(pqDtablePlan(b, cb)), estBatchRows(b)),
-      b, corpusVecsExcl(s, d, batch))
+    val cands = annCands(ivfcProbesFor(s, d, b),
+      minusBatch(stdSemAssign2(s, d).select(col("vec_id"), col("cell")), b),
+      byCell, exclSelf = false, dedup = true)
+    ingestPqRerank(s, d, cands, b)
   }
+
+  /** [[pqAdcRerank]] of an ingest batch against the persisted codes; the
+    * batch's ADC table is gated on a row estimate from its plan, since an
+    * arbitrary facade batch can exceed the broadcast budget. */
+  private def ingestPqRerank(s: SparkSession, d: String, cands: DataFrame,
+      b: DataFrame): DataFrame =
+    pqAdcRerank(cands,
+      stdPqCodesWide(s, d).join(b.select(col("vec_id").as("nid")), Seq("nid"), "left_anti"),
+      pqBatchDtable(s, d, b, estBatchRows(b)), b, minusBatch(visibleVecs(s, d), b))
 
   /** Overlay rows a DOC commit appends per index family
     * ([[graft.Ingest.commitDocs]]): each frame is the batch's rows under
@@ -3292,8 +3286,8 @@ object LlmPipeline extends QueryPack {
     // batch docs only.
     "q_dedup_substring_delta" -> ((s, d) => {
       val p = substrPostings(s, d)
-      val corpusGh = p.where(col("doc_id") % 10 =!= 7).select("gh").distinct()
-      substrSpanStats(p.where(col("doc_id") % 10 === 7).join(corpusGh, "gh"))
+      val corpusGh = p.where(!inBatch("doc_id")).select("gh").distinct()
+      substrSpanStats(p.where(inBatch("doc_id")).join(corpusGh, "gh"))
     }),
 
     // MinHash(k=8) + LSH(4 bands × 2 rows): candidates share a band bucket;
@@ -3354,7 +3348,7 @@ object LlmPipeline extends QueryPack {
     // so precision is 1 by construction.
     "q_dedup_minhash_delta" -> ((s, d) => {
       val ds = docShingles(s, d)
-      val isBatch = col("doc_id") % 10 === 7
+      val isBatch = inBatch("doc_id")
       val corpusBands = minhashBands(minhashSigs(s, d).where(!isBatch))
       val aggs = minhashSigAggs
       val batchBands = minhashBands(
@@ -3410,7 +3404,7 @@ object LlmPipeline extends QueryPack {
     // per-ingest observability hook; IngestSpec drives a corpus-novel
     // boilerplate batch through the same helper and sees the lag > 0.
     "q_shingle_cap_lag" -> ((s, d) =>
-      ingestShingleCapLag(s, d, t(s, d, "documents").where(col("doc_id") % 10 === 7))),
+      ingestShingleCapLag(s, d, t(s, d, "documents").where(inBatch("doc_id")))),
 
     // SimHash(32-bit) near-dup: token-frequency-weighted sign bits, pairs
     // (blocked by lang) with hamming distance <= 6.
@@ -3534,7 +3528,7 @@ object LlmPipeline extends QueryPack {
     // full pass (documented ingest trade). Batch core shared with the
     // streaming face (graft.streaming.Streams.semanticDedupAgainstIndex).
     "q_dedup_semantic_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
+      val isBatch = inBatch()
       val e = t(s, d, "embeddings")
       semanticVerdicts(s, d,
           e.where(isBatch).select(col("vec_id"), col("embedding")),
@@ -3594,11 +3588,7 @@ object LlmPipeline extends QueryPack {
           col("a.vec_id") =!= col("b.vec_id"))
         .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("neighbor_id"),
           r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 5, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      topKByCos(pairs, 5)
     }),
 
     // ANN scale path: sign-bit LSH buckets from deterministic broadcast
@@ -3614,12 +3604,7 @@ object LlmPipeline extends QueryPack {
         .select(col("a.vec_id").as("vec_id"), col("a.bucket").as("bucket"),
           col("b.vec_id").as("neighbor_id"),
           r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      // map-side k-bounded heaps (see q_sim_knn)
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      topKByCos(pairs, 3)
     }),
 
     // Bit-flip multi-probe LSH — the single-TABLE recall dial,
@@ -3638,21 +3623,9 @@ object LlmPipeline extends QueryPack {
       val masks = lit(0L) +: (0 until LSH_PLANES).map(p => lit(1L << p))
       val probes = b.select(col("vec_id"),
         explode(array(masks.map(m => col("bucket").bitwiseXOR(m)): _*)).as("pbucket"))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(b.as("b")), col("a.pbucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(e.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      val e = t(s, d, "embeddings")
+      annExactTop3(annCands(probes, b, Seq("pbucket" -> "bucket"),
+        exclSelf = true, dedup = false), e, e)
     }),
 
     // Multi-table LSH: LSH_TABLES independent tables of LSH_TABLE_BITS
@@ -3666,24 +3639,9 @@ object LlmPipeline extends QueryPack {
     // bucket join or the dedup shuffle.
     "q_sim_ann_lsh_multi" -> ((s, d) => {
       val b = lshMultiBuckets(s, d)
+      val e = t(s, d, "embeddings")
       // one narrow exchange parallelizes the bucket join (see spread)
-      val cands = spread(b).as("ba")
-        .join(maybeBroadcast(b.as("bb")), col("ba.tb") === col("bb.tb") &&
-          col("ba.bucket") === col("bb.bucket") &&
-          col("ba.vec_id") =!= col("bb.vec_id"))
-        .select(col("ba.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("a")), col("qid") === col("a.vec_id"))
-        .join(maybeBroadcast(e.as("b")), col("nid") === col("b.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      annExactTop3(annCands(spread(b), b, byBucket, exclSelf = true, dedup = true), e, e)
     }),
 
     // Multi-table LSH WITH bit-flip multiprobe — the canonical
@@ -3705,23 +3663,9 @@ object LlmPipeline extends QueryPack {
       // join + DISTINCT + rerank all run under the pinned layout
       val probes = spread(b).select(col("vec_id"), col("tb"),
         explode(array(masks.map(m => col("bucket").bitwiseXOR(m)): _*)).as("pbucket"))
-      val cands = probes.as("pa")
-        .join(maybeBroadcast(b.as("pb")), col("pa.tb") === col("pb.tb") &&
-          col("pa.pbucket") === col("pb.bucket") &&
-          col("pa.vec_id") =!= col("pb.vec_id"))
-        .select(col("pa.vec_id").as("qid"), col("pb.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("a")), col("qid") === col("a.vec_id"))
-        .join(maybeBroadcast(e.as("b")), col("nid") === col("b.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      val e = t(s, d, "embeddings")
+      annExactTop3(annCands(probes, b, Seq("tb" -> "tb", "pbucket" -> "bucket"),
+        exclSelf = true, dedup = true), e, e)
     }),
 
     // Vector-ingest delta — completes the per-ingest trilogy (exact hash
@@ -3733,25 +3677,10 @@ object LlmPipeline extends QueryPack {
     // collisions); the corpus is touched only through its narrow on-disk
     // (vec_id, tb, bucket) index plus per-candidate vector lookups.
     "q_sim_ann_lsh_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
-      val corpus = lshMultiBuckets(s, d).where(!isBatch)
-      val batch = spread(lshMultiBucketsPlan(t(s, d, "embeddings").where(isBatch)))
-      val cands = batch.as("ba")
-        .join(maybeBroadcast(corpus.as("bb")), col("ba.tb") === col("bb.tb") &&
-          col("ba.bucket") === col("bb.bucket"))
-        .select(col("ba.vec_id").as("qid"), col("bb.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("a")), col("qid") === col("a.vec_id"))
-        .join(maybeBroadcast(e.as("b")), col("nid") === col("b.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      val e = t(s, d, "embeddings")
+      val cands = annCands(spread(lshMultiBucketsPlan(e.where(inBatch()))),
+        lshMultiBuckets(s, d).where(!inBatch()), byBucket, exclSelf = false, dedup = true)
+      annExactTop3(cands, e, e)
     }),
 
     // Constant-occupancy LSH — the linear-class re-dial of the LSH
@@ -3778,25 +3707,9 @@ object LlmPipeline extends QueryPack {
       // hangs below it, and AQE's size-based coalesce would fold the
       // 2 MB of probe ids into one partition and single-thread the
       // 6M-row candidate join + rerank (measured 3.1 -> 5.7 s at sf0.1).
-      val pr = spread(art)
       val idx = art.where(col("own")).select(col("vec_id"), col("tb"), col("bucket"))
-      val cands = pr.as("pa")
-        .join(maybeBroadcast(idx.as("pb")), col("pa.tb") === col("pb.tb") &&
-          col("pa.bucket") === col("pb.bucket") &&
-          col("pa.vec_id") =!= col("pb.vec_id"))
-        .select(col("pa.vec_id").as("qid"), col("pb.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("a")), col("qid") === col("a.vec_id"))
-        .join(maybeBroadcast(e.as("b")), col("nid") === col("b.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      val e = t(s, d, "embeddings")
+      annExactTop3(annCands(spread(art), idx, byBucket, exclSelf = true, dedup = true), e, e)
     }),
 
     // Constant-occupancy LSH candidate-volume report — the saturation
@@ -3840,29 +3753,13 @@ object LlmPipeline extends QueryPack {
     // own-bucket index of the standing corpus: O(batch·tables·probes·c)
     // per ingest, the corpus never re-bucketed.
     "q_sim_ann_lshc_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
       val e = t(s, d, "embeddings")
       // tail inherits qid partitioning; count pinned vs AQE coalesce
       // (see q_sim_ann_lshc)
-      val probes = spread(lshcProbesPlan(e.where(isBatch), lshcNbits(embCount(s, d))))
-      val corpus = lshcProbes(s, d).where(col("own") && !isBatch)
+      val probes = spread(lshcProbesPlan(e.where(inBatch()), lshcNbits(embCount(s, d))))
+      val corpus = lshcProbes(s, d).where(col("own") && !inBatch())
         .select(col("vec_id"), col("tb"), col("bucket"))
-      val cands = probes.as("pa")
-        .join(maybeBroadcast(corpus.as("pb")), col("pa.tb") === col("pb.tb") &&
-          col("pa.bucket") === col("pb.bucket"))
-        .select(col("pa.vec_id").as("qid"), col("pb.vec_id").as("nid"))
-        .distinct()
-      val ev = e.select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(ev.as("a")), col("qid") === col("a.vec_id"))
-        .join(maybeBroadcast(ev.as("b")), col("nid") === col("b.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("a.embedding"), col("b.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      annExactTop3(annCands(probes, corpus, byBucket, exclSelf = false, dedup = true), e, e)
     }),
 
     // True IVF ANN: train a coarse quantizer (centroid per label cell,
@@ -3882,23 +3779,10 @@ object LlmPipeline extends QueryPack {
       // embeddings never ride the cell self-join (same discipline as the
       // multi-table LSH path). All sides size-gated.
       val assigned = ivfAssign(s, d)
+      val e = t(s, d, "embeddings")
       // one narrow exchange parallelizes the in-cell pair join (see spread)
-      val cands = spread(assigned).as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("a.cell").as("cell"),
-          col("b.vec_id").as("nid"))
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(e.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("cell"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      annExactTop3(annCands(spread(assigned), assigned, byCell,
+        exclSelf = true, dedup = false, keep = Seq("cell")), e, e)
     }),
 
     // Multi-probe IVF: same trained quantizer, but each QUERY vector
@@ -3912,55 +3796,24 @@ object LlmPipeline extends QueryPack {
     // one cell, so no DISTINCT pass is needed.
     "q_sim_ann_ivf_mp" -> ((s, d) => {
       // probe side reads the top-NPROBE probe-list index, database side
-      // the rank-1 assignment index; candidates are id-only and vectors
-      // join back per candidate (see q_baseline_ann_ivf)
-      val probes = spread(ivfProbes(s, d))
-      val assigned = ivfAssign(s, d)
-      val cands = probes.as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(e.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      // the rank-1 assignment index
+      val e = t(s, d, "embeddings")
+      annExactTop3(annCands(spread(ivfProbes(s, d)), ivfAssign(s, d), byCell,
+        exclSelf = true, dedup = false), e, e)
     }),
 
     // Trained-k IVF: both dials data-bound — k = ⌈√N⌉ cells trained from
     // a deterministic md5-bucket seed sample + one Lloyd step, ⌈√k⌉
-    // probes per query (see ivfKCentroids). Candidate/rerank shape is
-    // identical to q_sim_ann_ivf_mp; only the quantizer differs. Measured
+    // probes per query (see ivfKCentroids). Measured
     // recall@3 vs exhaustive at sf0.001: 0.579, vs 0.247 (label-cell ivf)
     // and 0.549 (label-cell multi-probe) — finer, geometry-trained cells
     // buy more recall per probed row (tracked per-round in RECALL.json).
     "q_sim_ann_ivf_k" -> ((s, d) => {
-      val probes = spread(ivfKProbes(s, d))
-      val assigned = ivfKAssign2(s, d)
+      val e = t(s, d, "embeddings")
       // distinct: a top-2-assigned neighbor can match two probe cells of
       // the same query — dedup the id-pairs BEFORE touching wide vectors
-      val cands = probes.as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(e.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      annExactTop3(annCands(spread(ivfKProbes(s, d)), ivfKAssign2(s, d), byCell,
+        exclSelf = true, dedup = true), e, e)
     }),
 
     // Constant-cell IVF — the 100 TB re-dialing of q_sim_ann_ivf_k,
@@ -3970,26 +3823,10 @@ object LlmPipeline extends QueryPack {
     // coarse groups, NP and cell size c both N-INDEPENDENT constants, so
     // candidate volume is O(N·NP·c) — the linear class in the
     // SCALING_r11 shuffle audit, vs N^1.75 for the √N-dial family.
-    // Candidate/rerank tail identical to q_sim_ann_ivf_k.
     "q_sim_ann_ivfc" -> ((s, d) => {
-      val probes = ivfcProbes(s, d)
-      val assigned = semAssign2(s, d).select(col("vec_id"), col("cell"))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(e.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(e.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      val e = t(s, d, "embeddings")
+      annExactTop3(annCands(ivfcProbes(s, d), semAssign2(s, d).select(col("vec_id"), col("cell")),
+        byCell, exclSelf = true, dedup = true), e, e)
     }),
 
     // Constant-cell IVF ingest delta — the per-ingest face of
@@ -4000,26 +3837,11 @@ object LlmPipeline extends QueryPack {
     // only the PERSISTED top-2 corpus assignment — O(batch·NP·c) work
     // per ingest, N-independent dials, the corpus never rescored.
     "q_sim_ann_ivfc_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
       val e = t(s, d, "embeddings")
-      val probes = ivfcProbesFor(s, d, e.where(isBatch))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(semAssign2(s, d).where(!isBatch)
-            .select(col("vec_id"), col("cell")).as("b")),
-          col("a.cell") === col("b.cell"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      val ev = e.select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(ev.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(ev.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      val cands = annCands(ivfcProbesFor(s, d, e.where(inBatch())),
+        semAssign2(s, d).where(!inBatch()).select(col("vec_id"), col("cell")),
+        byCell, exclSelf = false, dedup = true)
+      annExactTop3(cands, e, e)
     }),
 
     // Trained-k IVF ingest delta — the full-precision twin of
@@ -4031,27 +3853,10 @@ object LlmPipeline extends QueryPack {
     // meets only the PERSISTED top-2 corpus assignment — O(batch × cell)
     // work per ingest, the corpus is never rescored.
     "q_sim_ann_ivf_k_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
       val e = t(s, d, "embeddings")
-      val cents = ivfKCentroids(s, d)
-      val np = 2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt
-      val probes = ivfKCellsFor(e.where(isBatch), cents, np)
-      val cands = probes.as("a")
-        .join(maybeBroadcast(ivfKAssign2(s, d).where(!isBatch).as("b")),
-          col("a.cell") === col("b.cell"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      val ev = e.select(col("vec_id"), col("embedding"))
-      val pairs = cands
-        .join(maybeBroadcast(ev.as("ea")), col("qid") === col("ea.vec_id"))
-        .join(maybeBroadcast(ev.as("eb")), col("nid") === col("eb.vec_id"))
-        .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"),
-          r4(cosine(col("ea.embedding"), col("eb.embedding"))).as("cos"))
-      org.apache.spark.sql.graftx.TopK.topKPerKey(pairs,
-          keyNames = Seq("vec_id"),
-          orderBy = Seq("cos" -> false, "neighbor_id" -> true),
-          k = 3, rankName = "rnk")
-        .orderBy("vec_id", "rnk")
+      val cands = annCands(ivfKProbesFor(s, d, e.where(inBatch())),
+        ivfKAssign2(s, d).where(!inBatch()), byCell, exclSelf = false, dedup = true)
+      annExactTop3(cands, e, e)
     }),
 
     // Index-lifecycle drift monitor — the retrain trigger that closes the
@@ -4085,14 +3890,10 @@ object LlmPipeline extends QueryPack {
     // multiplies any vector arithmetic. (The naive per-candidate compute
     // was measured 14× slower at sf0.1: 10.8 s → this shape.)
     "q_sim_ann_ivfpq" -> ((s, d) => {
-      val probes = spread(ivfKProbes(s, d))
-      val assigned = ivfKAssign2(s, d)
-      val cands = probes.as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      pqAdcRerank(s, d, cands, pqCodesWide(s, d), pqCorpusDtable(s, d))
+      val e = t(s, d, "embeddings")
+      val cands = annCands(spread(ivfKProbes(s, d)), ivfKAssign2(s, d), byCell,
+        exclSelf = true, dedup = true)
+      pqAdcRerank(cands, pqCodesWide(s, d), pqCorpusDtable(s, d), e, e)
     }),
 
     // IVF-PQ ingest delta — the production property that makes PQ worth
@@ -4104,30 +3905,12 @@ object LlmPipeline extends QueryPack {
     // vectors are touched only for the ADC top-10 rerank, same as the
     // LSH/minhash/exact-hash deltas in this family.
     "q_sim_ann_ivfpq_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
       val e = t(s, d, "embeddings")
-      val cb = pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))
-      // batch probe list against the frozen coarse quantizer: np = 2⌈√k⌉,
-      // k bounded by the centroid artifact itself (a √N-row table)
-      val cents = ivfKCentroids(s, d)
-      val np = 2 * math.ceil(math.sqrt(ivfKNumCells(s, d).toDouble)).toInt
-      val probes = spread(ivfKCellsFor(e.where(isBatch), cents, np))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(ivfKAssign2(s, d).where(!isBatch).as("b")),
-          col("a.cell") === col("b.cell"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      pqAdcRerank(s, d, cands,
-        pqCodesWide(s, d).where(!(col("nid") % 10 === 7)),
-        // the batch's ADC table is O(batch·M·K) scalars by construction
-        // — broadcast its WIDE per-query form so the one-join ADC stage
-        // stays map-side (a fresh batch plan has no size estimate, so
-        // the generic gate would decline and re-shuffle the candidate
-        // set by qid). Size-gated on the EXACT fixture batch size from
-        // the persisted corpus count (ADVICE r14): past the broadcast
-        // budget the join degrades to a shuffled join, not a forced OOM
-        maybeBroadcastDtable(pqDtableWidePlan(pqDtablePlan(e.where(isBatch), cb)),
-          embCount(s, d) / 10 + 1))
+      val cands = annCands(spread(ivfKProbesFor(s, d, e.where(inBatch()))),
+        ivfKAssign2(s, d).where(!inBatch()), byCell, exclSelf = false, dedup = true)
+      // batch ADC table gated on the exact fixture batch size
+      pqAdcRerank(cands, pqCodesWide(s, d).where(!inBatch("nid")),
+        pqBatchDtable(s, d, e.where(inBatch()), embCount(s, d) / 10 + 1), e, e)
     }),
 
     // Constant-cell IVF-PQ — the memory-economy tier re-dialed for the
@@ -4143,14 +3926,10 @@ object LlmPipeline extends QueryPack {
     // coarse/fine centroids + top-2 assignment, the PQ codebooks/nibble
     // index, and the ADC distance table are all reused as-is.
     "q_sim_ann_ivfc_pq" -> ((s, d) => {
-      val probes = spread(ivfcProbes(s, d))
-      val assigned = semAssign2(s, d).select(col("vec_id"), col("cell"))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(assigned.as("b")), col("a.cell") === col("b.cell") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      pqAdcRerank(s, d, cands, pqCodesWide(s, d), pqCorpusDtable(s, d))
+      val e = t(s, d, "embeddings")
+      val cands = annCands(spread(ivfcProbes(s, d)),
+        semAssign2(s, d).select(col("vec_id"), col("cell")), byCell, exclSelf = true, dedup = true)
+      pqAdcRerank(cands, pqCodesWide(s, d), pqCorpusDtable(s, d), e, e)
     }),
 
     // Constant-cell IVF-PQ ingest delta — the per-ingest face: a new
@@ -4163,27 +3942,13 @@ object LlmPipeline extends QueryPack {
     // corpus is never rescored and its wide vectors are touched only
     // for the ADC shortlist rerank.
     "q_sim_ann_ivfc_pq_delta" -> ((s, d) => {
-      val isBatch = col("vec_id") % 10 === 7
       val e = t(s, d, "embeddings")
-      val probes = spread(ivfcProbesFor(s, d, e.where(isBatch)))
-      val cands = probes.as("a")
-        .join(maybeBroadcast(semAssign2(s, d).where(!isBatch)
-            .select(col("vec_id"), col("cell")).as("b")),
-          col("a.cell") === col("b.cell"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      val cb = pqCodebooks(s, d).select(col("m"), col("c").as("code"), col("centroid"))
-      pqAdcRerank(s, d, cands,
-        pqCodesWide(s, d).where(!(col("nid") % 10 === 7)),
-        // the batch's ADC table is O(batch·M·K) scalars by construction
-        // — broadcast its WIDE per-query form so the one-join ADC stage
-        // stays map-side (a fresh batch plan has no size estimate, so
-        // the generic gate would decline and re-shuffle the candidate
-        // set by qid). Size-gated on the EXACT fixture batch size from
-        // the persisted corpus count (ADVICE r14): past the broadcast
-        // budget the join degrades to a shuffled join, not a forced OOM
-        maybeBroadcastDtable(pqDtableWidePlan(pqDtablePlan(e.where(isBatch), cb)),
-          embCount(s, d) / 10 + 1))
+      val cands = annCands(spread(ivfcProbesFor(s, d, e.where(inBatch()))),
+        semAssign2(s, d).where(!inBatch()).select(col("vec_id"), col("cell")),
+        byCell, exclSelf = false, dedup = true)
+      // batch ADC table gated on the exact fixture batch size
+      pqAdcRerank(cands, pqCodesWide(s, d).where(!inBatch("nid")),
+        pqBatchDtable(s, d, e.where(inBatch()), embCount(s, d) / 10 + 1), e, e)
     }),
 
     // End-to-end training-data pipeline — the composition a real corpus

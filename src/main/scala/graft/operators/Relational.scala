@@ -30,10 +30,10 @@ object Relational extends QueryPack {
   private val dppMemo = scala.collection.concurrent.TrieMap[(SparkSession, String), String]()
   private def dppFactPath(s: SparkSession, d: String): String =
     dppMemo.getOrElseUpdate((s, d), {
-      // versioned + data-token'd like Tables.indexDir: a store built by
-      // older code or from since-regenerated data can never be reused
-      val path = s"/tmp/graft-dpp/v1/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        s"-${graft.Tables.dataToken(d)}/orders_by_month"
+      // under the dataset's index dir: versioned and data-token'd like
+      // every artifact (a store built by older code or from since-
+      // regenerated data is never reused), and inside GRAFT_INDEX_ROOT
+      val path = s"${graft.Tables.indexDir(d)}/orders_by_month"
       // publishAtomic: a concurrent session on the same dataset either
       // wins the rename or reads the winner's complete store — never a
       // half-written directory (VERDICT r8 minor). repartition on the

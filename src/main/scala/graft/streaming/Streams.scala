@@ -282,16 +282,6 @@ object Streams {
         report(graft.Ingest.commitDocs(spark, d, mb.toDF()), batchId)
       }
 
-  /** [[commitDocsSink]] for (vec_id, embedding) streams —
-    * [[graft.Ingest.commitVectors]] per micro-batch. */
-  def commitVectorsSink(spark: SparkSession, d: String, vectors: DataFrame)(
-      report: (DataFrame, Long) => Unit):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.outputMode("append")
-      .foreachBatch { (mb: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        report(graft.Ingest.commitVectors(spark, d, mb.toDF()), batchId)
-      }
-
   /** Streaming UPSERT sink — the CDC-apply shape: each micro-batch of
     * (doc_id, text) rows is applied to the standing index via
     * [[graft.Ingest.replaceDocs]] (changed ids swap content atomically,
@@ -314,16 +304,6 @@ object Streams {
         report(graft.Ingest.replaceDocs(spark, d, mb.toDF()), batchId)
       }
 
-  /** [[replaceDocsSink]] for (vec_id, embedding) streams —
-    * [[graft.Ingest.replaceVectors]] per micro-batch. */
-  def replaceVectorsSink(spark: SparkSession, d: String, vectors: DataFrame)(
-      report: (DataFrame, Long) => Unit):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.outputMode("append")
-      .foreachBatch { (mb: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        report(graft.Ingest.replaceVectors(spark, d, mb.toDF()), batchId)
-      }
-
   /** Streaming CHANGELOG-APPLY sink — the RESYNC shape (r19): each
     * micro-batch of `(doc_id, text, op, ord)` rows reduces to every
     * id's FINAL operation and applies upserts + DELETES together
@@ -342,16 +322,6 @@ object Streams {
     changes.writeStream.outputMode("append")
       .foreachBatch { (mb: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         report(graft.Ingest.applyDocChangelog(spark, d, mb.toDF()), batchId)
-      }
-
-  /** [[applyDocsChangelogSink]] for vector feeds
-    * (`(vec_id, embedding, op, ord)`). */
-  def applyVectorsChangelogSink(spark: SparkSession, d: String, changes: DataFrame)(
-      report: (DataFrame, Long) => Unit):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream.outputMode("append")
-      .foreachBatch { (mb: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        report(graft.Ingest.applyVectorChangelog(spark, d, mb.toDF()), batchId)
       }
 
   /** Running per-user totals via custom state (mapGroupsWithState): state =

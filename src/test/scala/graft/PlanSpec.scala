@@ -13,6 +13,11 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  test("the codegen class cache size took effect: the session reads back 4096") {
+    // a static conf: getOrCreate on an already-existing session ignores it
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
+  }
+
   test("q_scan_pruned pushes filter and prunes columns at the scan") {
     val p = plan("q_scan_pruned")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate"), p)
@@ -810,18 +815,43 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_ml_naive_bayes r22: fused scoring — no exchange between aggregation and argmax") {
-    val p = plan("q_ml_naive_bayes").split("== Initial Plan ==").head
-    assert(p.contains("TopKPerKeyPartial") && p.contains("TopKPerKeyFinal"), p)
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.graftx.{TopKPerKeyFinalExec, TopKPerKeyPartialExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeLike}
+    val df = SparkEntry.queries("q_ml_naive_bayes")(spark, TestSpark.SF)
+    df.collect() // finalizes the AQE plan walked below
+    // walk the AQE-final tree, descending into query stages and reused
+    // exchanges (both are leaves of the plain tree)
+    def kids(n: SparkPlan): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => n.children
+    }
+    def all(n: SparkPlan): Seq[SparkPlan] = n +: kids(n).flatMap(all)
+    val root = df.queryExecution.executedPlan
+    val fin = all(root).collectFirst { case f: TopKPerKeyFinalExec => f }
+    assert(fin.isDefined, root.toString)
     // the argmax heaps inherit the cached doc-token partitioning through
-    // the fused aggregate and the classes broadcast join: the plan slice
-    // from TopKPerKeyFinal down to TopKPerKeyPartial must cross no
-    // exchange (the r21 shape re-shuffled twice here)
-    val fin = p.indexOf("TopKPerKeyFinal"); val part = p.indexOf("TopKPerKeyPartial")
-    assert(fin >= 0 && part > fin, p)
-    val between = p.substring(fin, part)
-    assert(!between.contains("Exchange"),
-      s"argmax re-shuffles the scored frame:\n$between")
-    assert(!p.contains("SortMergeJoin"), p)
+    // the fused aggregate and the classes broadcast join: the path from
+    // TopKPerKeyFinal down to TopKPerKeyPartial must cross no exchange
+    // (the r21 shape re-shuffled twice here)
+    def pathToPartial(n: SparkPlan): Option[Seq[SparkPlan]] = n match {
+      case _: TopKPerKeyPartialExec => Some(Seq(n))
+      case _ => kids(n).iterator.map(pathToPartial).collectFirst { case Some(p) => n +: p }
+    }
+    val path = pathToPartial(fin.get)
+    assert(path.isDefined, s"no TopKPerKeyPartial below TopKPerKeyFinal:\n${fin.get}")
+    assert(!path.get.exists(_.isInstanceOf[ShuffleExchangeLike]),
+      s"argmax re-shuffles the scored frame:\n${fin.get}")
+    // nor may a subtree hanging off that path (a join's other side)
+    val offPath = path.get.init.flatMap(n => kids(n).filterNot(path.get.contains)).flatMap(all)
+    assert(!(path.get ++ offPath).exists(n =>
+      n.isInstanceOf[Exchange] || n.isInstanceOf[ReusedExchangeExec]),
+      s"exchange between TopKPerKeyFinal and TopKPerKeyPartial:\n${fin.get}")
+    val finalPlan = root.toString.split("== Initial Plan ==").head
+    assert(!finalPlan.contains("SortMergeJoin"), finalPlan)
   }
 
   test("lshcProbesPlan r22: per-table two-Generate shape (codegen stays under the 64 KB method limit)") {
